@@ -21,19 +21,33 @@ from .analytics import (
 from .config import EVENTS
 from .features import (
     assemble_defi_features,
-    view_borrow_features,
-    view_credit_mix,
     view_current_health_factor,
-    view_distinct_addresses,
-    view_historical_count_above_threshold,
     view_historical_health_and_risk,
-    view_lending_sum_redeems,
-    view_lending_time_and_count,
     view_liquidation_features,
-    view_repay_features,
+    view_wallet_activity,
 )
 from .quality import run_quality_gate
 from .stage import stage_account_positions, stage_events, stage_market_data
+
+
+def plan_features(cat: Catalog, now_epoch: int) -> DataFrame:
+    """The 27-column defi_features plan over the analytics layer (and
+    the staged market data) of the lake behind ``cat``, unexecuted."""
+    events = {name: cat.read("analytics", f"transpose_{name}_events") for name in EVENTS}
+    borrow = events["borrow"]
+    positions = cat.read(
+        "analytics", "the_graph_historical_market_data_and_account_positions"
+    )
+    return assemble_defi_features(
+        view_wallet_activity(events, now_epoch),
+        view_historical_health_and_risk(borrow, positions),
+        view_liquidation_features(events["liquidation"], now_epoch),
+        view_current_health_factor(
+            cat.read("stage", "the_graph_historical_market_data"),
+            cat.read("analytics", "the_graph_current_collateral_positions"),
+        ),
+        borrow,
+    )
 
 
 def run_pipeline(
@@ -149,7 +163,7 @@ def run_pipeline(
     # same fan-out as the stage layer: the 5 per-event enrich+insert
     # jobs are independent (separate target tables), so they submit
     # concurrently and the scheduler interleaves them across slots
-    def _analytics_one(item) -> tuple[str, DataFrame]:
+    def _analytics_one(item) -> None:
         name, cfg = item
         staged = cat.read("stage", f"transpose_{name}_events")
         enriched = enrich_events(
@@ -164,10 +178,9 @@ def run_pipeline(
                 partition_by=["year", "month"],
             ),
         )
-        return name, spark.read.parquet(path)
 
     with ThreadPoolExecutor(max_workers=5) as pool:
-        analytics_events = dict(pool.map(_analytics_one, EVENTS.items()))
+        list(pool.map(_analytics_one, EVENTS.items()))
 
     merged = merge_market_positions(
         cat.read("stage", "the_graph_historical_market_data"),
@@ -181,7 +194,6 @@ def run_pipeline(
         "market_data_and_account_positions",
         incremental_insert(spark, merged, merged_path, watermark_col="block_number"),
     )
-    positions = spark.read.parquet(merged_path)
 
     current_pos = current_collateral_positions(
         cat.read("raw", "the_graph_current_collateral_positions"),
@@ -190,36 +202,21 @@ def run_pipeline(
     current_pos.write.mode("overwrite").parquet(
         cat.path("analytics", "the_graph_current_collateral_positions")
     )
-    current_pos = cat.read("analytics", "the_graph_current_collateral_positions")
 
-    # --- feature views --------------------------------------------------------
-    spine = view_distinct_addresses(analytics_events)
-    borrow_f = view_borrow_features(analytics_events["borrow"])
-    repay_f = view_repay_features(analytics_events["repay"])
-    redeems_f = view_lending_sum_redeems(analytics_events["withdraw"])
-    lending_f = view_lending_time_and_count(analytics_events["deposit"], now_epoch)
-    liquidation_f = view_liquidation_features(analytics_events["liquidation"], now_epoch)
-    credit_mix_f = view_credit_mix(analytics_events, spine)
-    historical_f = view_historical_health_and_risk(analytics_events["borrow"], positions)
-    threshold_f = view_historical_count_above_threshold(
-        analytics_events["borrow"], positions
-    )
-    current_hf_f = view_current_health_factor(
-        cat.read("stage", "the_graph_historical_market_data"), current_pos
-    )
-
-    features = assemble_defi_features(
-        spine, repay_f, borrow_f, credit_mix_f, redeems_f, lending_f,
-        historical_f, threshold_f, liquidation_f, current_hf_f,
-        analytics_events["borrow"],
-    )
+    # --- features layer ---------------------------------------------------------
+    features = plan_features(cat, now_epoch)
     obs = None
     if metrics is not None:
         from pyspark.sql import Observation, functions as F
 
         obs = Observation("defi_features_rows")
         features = features.observe(obs, F.count(F.lit(1)).alias("n"))
-    features = features.cache()  # computed once, written to two sinks (SURVEY §4)
+    # Computed once for the gate and both sinks. A local checkpoint, not
+    # cache(): the returned frame pins no CacheManager entry (a cached
+    # plan left behind makes every later write on this lake re-plan it)
+    # and references no lake files, so it stays readable after later
+    # runs overwrite the tables it was computed from.
+    features = features.localCheckpoint()
 
     if streaming:
         # Streaming DQ semantics: TABLE-level constraints (no row to

@@ -3190,7 +3190,10 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     2. the new batch computes signatures for ITS docs only, then finds
        (a) new↔existing pairs by probe-joining the index and
        (b) new↔new pairs by self-join — both equi-joins on (band, key);
-    3. the index is maintained by APPENDING the new batch's rows.
+    3. the index the next batch reads is old + new band rows: the
+       staged band table holds both as partitions, so maintaining it
+       needs no extra write (this query starts every call from a fresh
+       corpus, so it drops the staged table when done).
 
     Per-batch cost is O(|batch| + matches), not O(|corpus|): the corpus
     is touched only through the index equi-join. Over bounded input,
@@ -3228,12 +3231,13 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     # pre-staging shape returned a valid empty frame (r12 ADVICE). A
     # fully empty bands table leaves no parquet at all under the root
     # — fall back to an empty frame of the same schema.
-    idx_path = os.path.join(stage, "__new=0")
+    from pyspark.errors import AnalysisException
+
     try:
         staged = spark.read.option("basePath", stage).parquet(stage)
         idx = staged.filter(F.col("__new") == 0).drop("__new")
         new_bands = staged.filter(F.col("__new") == 1).drop("__new")
-    except Exception:  # no partition dir at all: zero documents
+    except AnalysisException:  # no partition dir at all: zero documents
         idx = spark.createDataFrame([], bands.schema)
         new_bands = spark.createDataFrame([], bands.schema)
 
@@ -3258,15 +3262,13 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     probe = _pairs(new_bands, idx, anti_sym=False) # new ↔ existing
     intra = _pairs(new_bands, new_bands, anti_sym=True)  # new ↔ new
 
-    # MATERIALIZE the result BEFORE maintaining the index: the pair
-    # frames read idx_path lazily, so an in-place append first would
-    # leave correctness hanging on Spark never re-resolving the file
-    # listing (refreshByPath / a re-created reader / a future listing
-    # change would double-count the appended rows). After the eager
-    # localCheckpoint the returned frame references no file paths at
-    # all. At production scale each batch's bands would land as a
-    # manifest-committed version (fsutil.manifest_commit) instead of a
-    # bare append — same O(|batch|) maintenance, versioned isolation.
+    # MATERIALIZE the result before the staged table is deleted: the
+    # pair frames read it lazily. After the eager localCheckpoint the
+    # returned frame references no file paths at all. At production
+    # scale each batch's bands would land as a manifest-committed
+    # version of the index (fsutil.manifest_commit) instead of a
+    # per-call staging dir — same O(|batch|) maintenance, versioned
+    # isolation.
     result = (
         known.union(probe)
         .union(intra)
@@ -3275,12 +3277,9 @@ def q_dedup_incremental_minhash(spark, sf_dir):
         .localCheckpoint()  # eager
     )
 
-    # index maintenance: next batch sees old + new signatures — now a
-    # parquet copy of the new batch's band rows, no minhash recompute
-    new_bands.write.mode("append").parquet(idx_path)
     # the eager checkpoint above cut every file reference, so the
     # per-call staging copy of the band table is garbage now — reclaim
-    # it instead of leaking a corpus-sized dir per call (r12 ADVICE)
+    # it instead of leaking a corpus-sized dir per call
     import shutil
 
     shutil.rmtree(stage, ignore_errors=True)

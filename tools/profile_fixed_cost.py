@@ -9,7 +9,12 @@ Per query, after one warm-up execution, reports (median of --runs):
 - construct_s: fn(spark, sf_dir) — plan building + analysis trigger
 - plan_s:      force physical planning via explainString (no jobs)
 - exec_s:      noop write of the pre-built frame
-- jobs/stages/tasks: deltas from the status tracker across the exec
+- jobs/stages/tasks: of the exec, read from the status tracker
+
+Each phase of each run submits its jobs under its own job group and
+reads that group back (``getJobIdsForGroup(None)`` sees only jobs
+outside every group). Jobs a query submits under a group of its own,
+such as streaming micro-batches, are not counted.
 """
 
 from __future__ import annotations
@@ -42,10 +47,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = mod.queries()
     jvm = spark._sc._jvm
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
-    def job_stage_task_count():
-        ids = tracker.getJobIdsForGroup(None)
+    def job_stage_task_count(group):
+        ids = tracker.getJobIdsForGroup(group)
         n_jobs = len(ids)
         n_stages = 0
         n_tasks = 0
@@ -81,27 +87,29 @@ def main() -> None:
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             continue
         cons, plan, execs, jobs, stages, tasks, cjobs = [], [], [], [], [], [], []
-        for _ in range(runs):
-            c0 = job_stage_task_count()
+        for i in range(runs):
+            group = f"profile_fixed_cost:{name}:{i}"
+            sc.setJobGroup(f"{group}:construct", name)
             t0 = time.time()
             df = fn(spark, sf_dir)
             t1 = time.time()
-            c1 = job_stage_task_count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
             jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
             t2 = time.time()
-            j0 = job_stage_task_count()
+            sc.setJobGroup(f"{group}:exec", name)
             df.write.format("noop").mode("overwrite").save()
             t3 = time.time()
-            j1 = job_stage_task_count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            n_jobs, n_stages, n_tasks = job_stage_task_count(f"{group}:exec")
             cons.append(t1 - t0)
             plan.append(t2 - t1)
             execs.append(t3 - t2)
-            cjobs.append(c1[0] - c0[0])
-            jobs.append(j1[0] - j0[0])
-            stages.append(j1[1] - j0[1])
-            tasks.append(j1[2] - j0[2])
+            cjobs.append(job_stage_task_count(f"{group}:construct")[0])
+            jobs.append(n_jobs)
+            stages.append(n_stages)
+            tasks.append(n_tasks)
         out[name] = {
             "construct_s": round(statistics.median(cons), 3),
             "construct_jobs": int(statistics.median(cjobs)),
